@@ -63,7 +63,7 @@ def main() -> int:
     ap.add_argument("--output", required=True,
                     help="extracted table path (parquet dir or Iceberg)")
     ap.add_argument("--mode", default="fused",
-                    choices=["fused", "paged", "staged", "manifest"],
+                    choices=["fused", "paged", "manifest"],
                     help="pipeline shape; 'manifest' reads parquet "
                          "row-groups worker-side (parquet --input only; "
                          "NOT resumable — blind overwrite of --output; "

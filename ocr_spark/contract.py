@@ -1897,7 +1897,8 @@ FROM m
 # the sums directly from the formula.  Any wrong filter inverse, row order,
 # stride, or channel swap breaks the hash.  24×16 / grid 4 divide evenly,
 # so the oracle's pixel→cell map is a plain integer division (the general
-# floor-boundary map is pytest-pinned in test_multimodal.py).
+# floor-boundary map is pytest-pinned in
+# tests/test_training_ops.py::test_features_nonsquare_grid_boundaries).
 _MM_W, _MM_H = 24, 16
 _MM_RGB = (
     "(3 * x + 7 * y + media_id) % 256",

@@ -6,15 +6,23 @@ documents/pages inside a batch (the same granularity the reference batches
 at, document.py:91-133).  No row-at-a-time Spark UDFs anywhere.
 
 Stage map (reference → here):
-- parse_pages:    fitz.open + page list (document.py:532-544) + cross-doc
-                  page flattening (document.py:783)
-- analyze_pages:  rasterize→layout→native-probe (document.py:105-117)
-- finish_native:  consolidation for covered pages (document.py:116)
-- finish_ocr:     dense OCR batches + consolidation (document.py:119-133)
+- _extract_page:      the one per-page chain — layout + native probe →
+                      native | OCR route → consolidate (document.py:105-133)
+- extract_docs:       fused plan — fitz.open + page list (document.py:532-544)
+                      and _extract_page per page, straight off the scan
+- extract_manifest:   extract_docs over worker-read parquet row-groups
+- parse_pages:        paged plan, stage 1 — doc rows → page rows, the
+                      cross-doc page flattening (document.py:783)
+- analyze_and_finish: paged plan, stage 2 — decode_page + _extract_page
+                      after the salted page-level exchange
+
+Both plans return blocks as one JSON string per page
+(PAGE_BLOCKS_JSON_SCHEMA), parsed JVM-side by pipeline._parse_blocks_json.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 from typing import Any
 
@@ -60,6 +68,29 @@ def _pack_blocks(blocks: list[dict]) -> list[dict]:
         }
         for bi, b in enumerate(blocks)
     ]
+
+
+def _extract_page(page, dpi: int, lang: str | None) -> tuple[bool, str]:
+    """One decoded page through the whole per-page chain: layout + native
+    probe → native | OCR route → consolidate → ``(ocr, blocks_json)``.
+
+    Raises on any kernel failure; both callers turn that into a
+    page-level EXTRACT_ERROR lineage row, so every plan fails at the same
+    granularity and produces identical output."""
+    info = hx.analyze_page(page, dpi)
+    layout = [
+        {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
+        for b in info["layout"]
+    ]
+    if info["needs_ocr"]:
+        lines = hx.extract_ocr_text(page, dpi, lang or "en")
+    else:
+        lines = [
+            {"bbox": _bbox_list(ln["bbox"]), "content": ln["content"]}
+            for ln in info["native_lines"]
+        ]
+    blocks = _pack_blocks(hx.finish_page(lines, layout))
+    return bool(info["needs_ocr"]), json.dumps(blocks)
 
 
 def parse_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -114,96 +145,6 @@ def parse_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out)
 
 
-def analyze_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Page rows → + layout, native_lines, needs_ocr (the probe).
-
-    Heavy stage: runs AFTER the salted page-level repartition so giant-doc
-    skew is already broken (SURVEY.md §3.3)."""
-    for pdf in batches:
-        layouts, natives, flags = [], [], []
-        errors = list(pdf["error"])
-        for pos, (page_bytes, doc_dpi, error) in enumerate(
-            zip(pdf["page_bytes"], pdf["doc_dpi"], pdf["error"])
-        ):
-            if error is not None or page_bytes is None:
-                layouts.append([])
-                natives.append([])
-                flags.append(False)
-                continue
-            try:
-                page = hx.decode_page(bytes(page_bytes))
-                info = hx.analyze_page(page, int(doc_dpi))
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                layouts.append([])
-                natives.append([])
-                flags.append(False)
-                errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
-                continue
-            layouts.append(
-                [
-                    {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
-                    for b in info["layout"]
-                ]
-            )
-            natives.append(
-                [
-                    {"bbox": _bbox_list(ln["bbox"]), "content": ln["content"]}
-                    for ln in info["native_lines"]
-                ]
-            )
-            flags.append(bool(info["needs_ocr"]))
-        out = pdf.copy()
-        out["error"] = errors
-        out["layout"] = layouts
-        out["native_lines"] = natives
-        out["needs_ocr"] = flags
-        yield out
-
-
-def _finish_common(pdf: pd.DataFrame, lines_per_row: list[list[dict]],
-                   ocr_flag: bool) -> pd.DataFrame:
-    blocks_col = []
-    errors = list(pdf["error"])
-    for pos, (lines, layout) in enumerate(zip(lines_per_row, pdf["layout"])):
-        try:
-            layout_dicts = [
-                {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
-                for b in layout
-            ]
-            blocks_col.append(_pack_blocks(hx.finish_page(lines, layout_dicts)))
-        except Exception as e:  # noqa: BLE001 - failure-code lineage
-            blocks_col.append([])
-            errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
-    return pd.DataFrame(
-        {
-            "url": pdf["url"],
-            "warc_ts": pdf["warc_ts"],
-            "lang": pdf["lang"],
-            "page_i": pdf["page_i"],
-            "n_pages": pdf["n_pages"],
-            # error rows never count as OCR pages — keeps ocr_pages
-            # identical across fused/paged/staged for the same input
-            "ocr": [ocr_flag and e is None for e in errors],
-            "blocks": blocks_col,
-            "truncated": pdf["truncated"],
-            "error": errors,
-        }
-    )
-
-
-def finish_native(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Covered pages: consolidate the native text layer (document.py:116)."""
-    for pdf in batches:
-        lines_per_row = [
-            [
-                {"bbox": _bbox_list(ln["bbox"]), "content": ln["content"]}
-                for ln in natives
-            ]
-            for natives in pdf["native_lines"]
-        ]
-        yield _finish_common(pdf, lines_per_row, ocr_flag=False)
-
-
 def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Doc-level fully-fused stage: decode + probe + route + consolidate for
     every page of a document in ONE pass, straight from the scanned doc row.
@@ -221,10 +162,8 @@ def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     Right default when page kernels are CPU-cheap and docs are smallish;
     for corpora with giant documents use mode='paged' (page-level salted
-    spread), for GPU OCR use mode='staged'.
+    spread through :func:`analyze_and_finish`, same per-page kernel).
     """
-    import json
-
     for pdf in batches:
         out: dict[str, list[Any]] = {
             "url": [], "warc_ts": [], "lang": [], "page_i": [],
@@ -263,7 +202,7 @@ def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 continue
             # Page indices are read under the doc-level guard (parity with
             # parse_pages, where a page-index failure is a PARSE_ERROR for
-            # the whole document in the paged/staged plans).
+            # the whole document in the paged plan).
             try:
                 page_is = [_page_i(p) for p in doc["pages"]]
             except Exception as e:  # noqa: BLE001 - failure-code lineage
@@ -271,39 +210,19 @@ def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                      f"PARSE_ERROR: {type(e).__name__}: {e}")
                 continue
             # The kernel loop is guarded per PAGE — the same granularity as
-            # analyze_and_finish in the paged/staged plans, so every mode
-            # produces IDENTICAL output on an error-injected corpus: a
-            # throwing page becomes one page_i-level EXTRACT_ERROR lineage
-            # row while the document's good pages survive, and a single bad
-            # page can never abort a Spark task (or drop its siblings).
+            # analyze_and_finish in the paged plan, so both plans produce
+            # IDENTICAL output on an error-injected corpus: a throwing page
+            # becomes one page_i-level EXTRACT_ERROR lineage row while the
+            # document's good pages survive, and a single bad page can
+            # never abort a Spark task (or drop its siblings).
             for pi, page in zip(page_is, doc["pages"]):
                 try:
-                    info = hx.analyze_page(page, doc["dpi"])
-                    layout = [
-                        {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
-                        for b in info["layout"]
-                    ]
-                    if info["needs_ocr"]:
-                        lines = hx.extract_ocr_text(
-                            page, doc["dpi"], lang or "en"
-                        )
-                    else:
-                        lines = [
-                            {
-                                "bbox": _bbox_list(ln["bbox"]),
-                                "content": ln["content"],
-                            }
-                            for ln in info["native_lines"]
-                        ]
-                    emit(url, warc_ts, lang, pi, npg,
-                         bool(info["needs_ocr"]),
-                         json.dumps(
-                             _pack_blocks(hx.finish_page(lines, layout))
-                         ),
-                         None, trunc)
+                    ocr, blocks = _extract_page(page, doc["dpi"], lang)
                 except Exception as e:  # noqa: BLE001 - failure-code lineage
                     emit(url, warc_ts, lang, pi, npg, False, "[]",
                          f"EXTRACT_ERROR: {type(e).__name__}: {e}", trunc)
+                    continue
+                emit(url, warc_ts, lang, pi, npg, ocr, blocks, None, trunc)
         yield pd.DataFrame(out)
 
 
@@ -351,72 +270,28 @@ def extract_manifest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def analyze_and_finish(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    """Fused phase 2: probe + native/OCR routing + consolidation in ONE
-    pass over each Arrow batch (the distributed mirror of the reference's
-    per-batch queue, document.py:91-133).
-
-    Avoids re-running the heavy analyze stage per branch (or persisting
-    binary page rows): the needs-OCR split happens *inside* the batch —
-    OCR-routed pages are sub-batched together so a model-backed extractor
-    still sees dense OCR batches at Arrow-batch granularity.  Use the
-    staged three-branch plan (pipeline.PipelineConfig(mode='staged')) when
-    the OCR path runs on separate GPU executors and needs its own stage."""
+    """Paged plan, stage 2: page rows (after the salted page-level
+    exchange) → one PAGE_BLOCKS_JSON_SCHEMA row each.  Every page is
+    decoded from its ``page_bytes`` and run through :func:`_extract_page`
+    — the kernel the fused plan runs — under the same per-page
+    EXTRACT_ERROR guard.  Rows that already carry a PARSE_ERROR, and
+    zero-page placeholders, pass through with empty blocks."""
     for pdf in batches:
-        n = len(pdf)
-        blocks_col: list[list[dict] | None] = [None] * n
-        ocr_col = [False] * n
-        ocr_idx: list[int] = []
-        ocr_pages: dict[int, dict] = {}  # decoded once, reused below
+        ocr_col: list[bool] = []
+        blocks_col: list[str] = []
         errors = list(pdf["error"])
-        for pos, (page_bytes, doc_dpi, error) in enumerate(
-            zip(pdf["page_bytes"], pdf["doc_dpi"], pdf["error"])
+        for pos, (page_bytes, doc_dpi, lang, error) in enumerate(
+            zip(pdf["page_bytes"], pdf["doc_dpi"], pdf["lang"], pdf["error"])
         ):
-            if error is not None or page_bytes is None:
-                blocks_col[pos] = []
-                continue
-            # per-PAGE guard (page granularity here): a throwing page
-            # becomes an EXTRACT_ERROR lineage row, not a task failure
-            try:
-                page = hx.decode_page(bytes(page_bytes))
-                info = hx.analyze_page(page, int(doc_dpi))
-                layout = [
-                    {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
-                    for b in info["layout"]
-                ]
-                if info["needs_ocr"]:
-                    ocr_idx.append(pos)
-                    ocr_col[pos] = True
-                    ocr_pages[pos] = page
-                    blocks_col[pos] = layout  # stash layout; lines below
-                else:
-                    lines = [
-                        {
-                            "bbox": _bbox_list(ln["bbox"]),
-                            "content": ln["content"],
-                        }
-                        for ln in info["native_lines"]
-                    ]
-                    blocks_col[pos] = _pack_blocks(
-                        hx.finish_page(lines, layout)
-                    )
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                blocks_col[pos] = []
-                errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
-        # dense OCR sub-batch (reference document.py:119-133)
-        for pos in ocr_idx:
-            try:
-                lines = hx.extract_ocr_text(
-                    ocr_pages[pos],
-                    int(pdf["doc_dpi"].iloc[pos]),
-                    pdf["lang"].iloc[pos] or "en",
-                )
-                blocks_col[pos] = _pack_blocks(
-                    hx.finish_page(lines, blocks_col[pos])
-                )
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                blocks_col[pos] = []
-                ocr_col[pos] = False
-                errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
+            ocr, blocks = False, "[]"
+            if error is None and page_bytes is not None:
+                try:
+                    page = hx.decode_page(bytes(page_bytes))
+                    ocr, blocks = _extract_page(page, int(doc_dpi), lang)
+                except Exception as e:  # noqa: BLE001 - failure-code lineage
+                    errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
+            ocr_col.append(ocr)
+            blocks_col.append(blocks)
         yield pd.DataFrame(
             {
                 "url": pdf["url"],
@@ -425,38 +300,8 @@ def analyze_and_finish(
                 "page_i": pdf["page_i"],
                 "n_pages": pdf["n_pages"],
                 "ocr": ocr_col,
-                "blocks": blocks_col,
+                "blocks_json": blocks_col,
                 "truncated": pdf["truncated"],
                 "error": errors,
             }
         )
-
-
-def finish_ocr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """OCR-routed pages: recognition + consolidation.
-
-    Because the branch is a FILTER on needs_ocr, Arrow batches here are
-    already dense with OCR work — the distributed analogue of the
-    reference's OCR re-batching queue (document.py:119-133)."""
-    for pdf in batches:
-        lines_per_row = []
-        errors = list(pdf["error"])
-        for pos, (page_bytes, doc_dpi, lang, error) in enumerate(
-            zip(pdf["page_bytes"], pdf["doc_dpi"], pdf["lang"], pdf["error"])
-        ):
-            if error is not None or page_bytes is None:
-                lines_per_row.append([])
-                continue
-            try:
-                page = hx.decode_page(bytes(page_bytes))
-                lines_per_row.append(
-                    hx.extract_ocr_text(page, int(doc_dpi), lang or "en")
-                )
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                lines_per_row.append([])
-                errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
-        pdf = pdf.copy()
-        pdf["error"] = errors
-        yield _finish_common(pdf, lines_per_row, ocr_flag=True)
-
-

@@ -1,17 +1,25 @@
 """The end-to-end extraction pipeline as a declarative Spark plan.
 
-Physical shape (SURVEY.md §4):
+Two physical plans (SURVEY.md §4) share one per-page kernel
+(extract_udfs._extract_page) and one tail:
 
+    fused (default):
     Scan pages [project url,warc_ts,html,lang — text column pruned]
-    → MapInPandas parse            (doc → page rows; cheap)
+    → MapInPandas extract_docs     (decode + per-page kernel; blocks as JSON)
+
+    paged (giant-document corpora):
+    Scan pages [same pruned projection]
+    → MapInPandas parse_pages      (doc → page rows; cheap)
     → Exchange xxhash64(url, page_i)   -- salted page-level skew break (R3)
-    → MapInPandas analyze          (layout + native probe; heavy)
-    → persist / stage table
-    → Union( filter(!needs_ocr) → MapInPandas finish_native
-           , filter(needs_ocr)  → MapInPandas finish_ocr   -- dense batches
-           , filter(error)      → empty blocks (SQL only) )
+    → MapInPandas analyze_and_finish   (decode_page + per-page kernel)
+
+    then, for both:
+    → from_json blocks             (codegen'd, JVM-side)
     → SQL postprocess (P3-P5 as higher-order functions over blocks)
     → groupBy(url) assemble  (sort_array by page i; text joins '\\n'/'\\n\\n')
+
+Manifest mode (extract_from_path) is the fused plan fed by worker-side
+parquet reads instead of a JVM scan.
 
 Everything after the UDFs is pure Catalyst-optimizable SQL: predicates,
 text assembly, ids, and metrics never touch Python.
@@ -24,13 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators import extract_udfs as udfs
-from .schemas import (
-    ANALYZED_SCHEMA,
-    BLOCK_TYPE,
-    PAGE_BLOCKS_JSON_SCHEMA,
-    PAGE_BLOCKS_SCHEMA,
-    PAGE_ROW_SCHEMA,
-)
+from .schemas import BLOCK_TYPE, PAGE_BLOCKS_JSON_SCHEMA, PAGE_ROW_SCHEMA
 
 # P3 — court-heading regex (document.py:630).  Java regex; `(?i)` prefix
 # replaces Python's re.IGNORECASE, `^` anchor replicates re.match.
@@ -93,24 +95,24 @@ class PipelineConfig:
       return (binary columns are the expensive thing to move through
       Arrow).  'paged' explodes to page rows first and salts them across
       partitions (R3) — choose it when single documents are big enough to
-      dominate a task (giant-PDF corpora).  'staged' is the three-branch
-      plan (probe stage → filter split → dense OCR stage → union) for
-      deployments where the OCR path runs on different (GPU) executors
-      and must be its own stage — pair it with stage_path there.
+      dominate a task (giant-PDF corpora).  Both run the same per-page
+      kernel and produce identical output.
     - page_partitions: width of the salted page-level exchange before the
-      heavy analyze stage (None → spark.sql.shuffle.partitions).
-    - persist_intermediate: cache the analyzed stage so the native/OCR/error
-      branches don't recompute layout detection (staged mode only); at real
-      scale point stage_path at a durable location instead (Iceberg staging
-      table).
+      paged plan's kernel stage, and of manifest mode's split spread
+      (None → spark.sql.shuffle.partitions).
     - postprocess: apply the P3-P5 ignore rewrite (document.py:625-642).
     """
 
     mode: str = "fused"
     page_partitions: int | None = None
-    persist_intermediate: bool = True
-    stage_path: str | None = None
     postprocess: bool = True
+
+    def __post_init__(self):
+        if self.mode not in ("fused", "paged"):
+            raise ValueError(
+                f"unknown PipelineConfig.mode {self.mode!r}; "
+                "expected 'fused' or 'paged'"
+            )
 
 
 def parse_stage(pages: DataFrame) -> DataFrame:
@@ -128,20 +130,6 @@ def _spread(page_rows: DataFrame, cfg: PipelineConfig) -> DataFrame:
         page_rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     return page_rows.repartition(n, F.xxhash64("url", "page_i"))
-
-
-def analyze_stage(page_rows: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Salted page-level exchange + the heavy probe stage."""
-    return _spread(page_rows, cfg).mapInPandas(
-        udfs.analyze_pages, ANALYZED_SCHEMA
-    )
-
-
-def fused_finish_stage(page_rows: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Single-pass phase 2: probe + route + consolidate inside one UDF."""
-    return _spread(page_rows, cfg).mapInPandas(
-        udfs.analyze_and_finish, PAGE_BLOCKS_SCHEMA
-    )
 
 
 def _parse_blocks_json(raw: DataFrame) -> DataFrame:
@@ -163,37 +151,14 @@ def doc_fused_stage(pages: DataFrame) -> DataFrame:
     return _parse_blocks_json(raw)
 
 
-def branch_and_finish(analyzed: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """needs-OCR routing (R2): three branches over the analyzed stage."""
-    spark = analyzed.sparkSession
-    if cfg.stage_path:
-        analyzed.write.mode("overwrite").parquet(cfg.stage_path)
-        analyzed = spark.read.parquet(cfg.stage_path)
-    elif cfg.persist_intermediate:
-        analyzed = analyzed.persist()
-
-    ok = analyzed.filter(F.col("error").isNull())
-    native = (
-        ok.filter(~F.col("needs_ocr"))
-        .drop("page_bytes")  # binary never rides past the stage that needs it
-        .mapInPandas(udfs.finish_native, PAGE_BLOCKS_SCHEMA)
+def paged_stage(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Page-level extraction: doc rows → page rows → salted page-level
+    exchange → the per-page kernel, blocks returned as JSON like the
+    fused plan."""
+    raw = _spread(parse_stage(pages), cfg).mapInPandas(
+        udfs.analyze_and_finish, PAGE_BLOCKS_JSON_SCHEMA
     )
-    ocr = ok.filter(F.col("needs_ocr")).mapInPandas(
-        udfs.finish_ocr, PAGE_BLOCKS_SCHEMA
-    )
-    blocks_type = "array<" + BLOCK_TYPE.simpleString() + ">"
-    errs = analyzed.filter(F.col("error").isNotNull()).select(
-        "url",
-        "warc_ts",
-        "lang",
-        "page_i",
-        "n_pages",
-        F.lit(False).alias("ocr"),
-        F.expr(f"CAST(array() AS {blocks_type})").alias("blocks"),
-        "truncated",
-        "error",
-    )
-    return native.unionByName(ocr).unionByName(errs)
+    return _parse_blocks_json(raw)
 
 
 def postprocess_stage(page_blocks: DataFrame) -> DataFrame:
@@ -293,25 +258,17 @@ def extract(
         executor_backend,
     ):
         # fail fast on the driver: the model backend has no per-page byte
-        # handoff (fitz documents are not page-sliceable), so paged/staged
+        # handoff (fitz documents are not page-sliceable), so paged mode
         # would otherwise surface as misleading per-doc PARSE_ERROR rows
         raise ValueError(
             "OCR_SPARK_BACKEND=model supports mode='fused' only "
-            "(PDF payloads are not page-sliceable for the paged/staged "
-            "stage handoff)"
+            "(PDF payloads are not page-sliceable for the paged plan's "
+            "page handoff)"
         )
     if cfg.mode == "fused":
         finished = doc_fused_stage(pages)
-    elif cfg.mode == "paged":
-        finished = fused_finish_stage(parse_stage(pages), cfg)
-    elif cfg.mode == "staged":
-        analyzed = analyze_stage(parse_stage(pages), cfg)
-        finished = branch_and_finish(analyzed, cfg)
     else:
-        raise ValueError(
-            f"unknown PipelineConfig.mode {cfg.mode!r}; "
-            "expected 'fused', 'paged', or 'staged'"
-        )
+        finished = paged_stage(pages, cfg)
     if cfg.postprocess:
         finished = postprocess_stage(finished)
     return assemble_stage(finished)

@@ -76,15 +76,6 @@ class TestGoldenE2E:
 
 
 class TestPipelineVariants:
-    def test_no_persist_same_result(self, spark, pages_parquet, extracted):
-        alt = extract(
-            read_pages(spark, pages_parquet),
-            PipelineConfig(persist_intermediate=False, page_partitions=4),
-        )
-        a = {r.url: r.text for r in alt.select("url", "text").collect()}
-        b = {r.url: r.text for r in extracted.select("url", "text").collect()}
-        assert a == b
-
     def test_manifest_mode_identical_tree(self, spark, pages_parquet, extracted):
         """Manifest mode (workers read parquet row-groups directly; payload
         never crosses the JVM boundary) must produce the same tree."""
@@ -109,27 +100,6 @@ class TestPipelineVariants:
         key = ["url", "page_i", "block_i", "block_type", "line_i", "content"]
         a = sorted(map(tuple, flatten_lines(paged).select(key).collect()))
         b = sorted(map(tuple, flatten_lines(extracted).select(key).collect()))
-        assert a == b
-
-    def test_staged_mode_identical_tree(self, spark, pages_parquet, extracted):
-        """The staged three-branch plan (GPU deployment shape) must produce
-        the exact same nested tree as the default fused plan."""
-        staged = extract(
-            read_pages(spark, pages_parquet),
-            PipelineConfig(mode="staged", page_partitions=4),
-        )
-        key = ["url", "page_i", "block_i", "block_type", "line_i", "content"]
-        a = sorted(map(tuple, flatten_lines(staged).select(key).collect()))
-        b = sorted(map(tuple, flatten_lines(extracted).select(key).collect()))
-        assert a == b
-
-    def test_stage_table_same_result(self, spark, pages_parquet, extracted, tmp_path):
-        alt = extract(
-            read_pages(spark, pages_parquet),
-            PipelineConfig(stage_path=str(tmp_path / "stage")),
-        )
-        a = {r.url: r.text for r in alt.select("url", "text").collect()}
-        b = {r.url: r.text for r in extracted.select("url", "text").collect()}
         assert a == b
 
     def test_postprocess_off_keeps_raw_types(self, spark, pages_parquet):
@@ -202,7 +172,7 @@ class TestPipelineVariants:
             "lang string"
         )
         df = spark.createDataFrame([row], schema)
-        for mode in ("fused", "paged", "staged"):
+        for mode in ("fused", "paged"):
             out = extract(df, PipelineConfig(mode=mode, page_partitions=2)).collect()
             assert len(out) == 1, mode
             r = out[0]
@@ -257,7 +227,7 @@ class TestPipelineVariants:
             "lang string"
         )
         df = spark.createDataFrame(rows, schema)
-        for mode in ("fused", "paged", "staged"):
+        for mode in ("fused", "paged"):
             out = {
                 r.url: r
                 for r in extract(
@@ -274,10 +244,8 @@ class TestPipelineVariants:
     def test_error_granularity_identical_across_modes(self, spark):
         """Error lineage is per PAGE in every mode: a document mixing good
         and kernel-throwing pages keeps its good pages' text and records
-        ONE EXTRACT_ERROR for the bad page — and fused, paged, and staged
-        produce byte-identical rows for it (fused used to drop the whole
-        document to a single page_i=-1 error row, diverging from the
-        per-page guard of the paged/staged plans)."""
+        ONE EXTRACT_ERROR for the bad page — and fused and paged produce
+        byte-identical rows for it."""
         import datetime as dt
 
         from ocr_spark.payload import MAGIC
@@ -302,7 +270,7 @@ class TestPipelineVariants:
             "lang string",
         )
         results = {}
-        for mode in ("fused", "paged", "staged"):
+        for mode in ("fused", "paged"):
             out = extract(
                 df, PipelineConfig(mode=mode, page_partitions=2)
             ).collect()
@@ -321,4 +289,4 @@ class TestPipelineVariants:
                           for ln in b.lines]) for b in p.blocks])
                  for p in r.pages],
             )
-        assert results["fused"] == results["paged"] == results["staged"]
+        assert results["fused"] == results["paged"]

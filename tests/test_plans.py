@@ -59,6 +59,40 @@ class TestPlans:
         exchange_section = plan.split("Exchange hashpartitioning", 1)[1]
         assert "html" not in exchange_section[:400]
 
+    def test_paged_plan_returns_blocks_as_json(self, spark, pages_parquet):
+        """Paged mode hands blocks back from Python the way fused does: one
+        JSON string per page, parsed JVM-side by from_json — no Python UDF
+        in the plan outputs a nested block struct through Arrow."""
+        from ocr_spark.pipeline import PipelineConfig, extract, read_pages
+
+        qe = extract(
+            read_pages(spark, pages_parquet),
+            PipelineConfig(mode="paged", page_partitions=4),
+        )._jdf.queryExecution()
+        udf_outputs = {}
+        stack = [qe.optimizedPlan()]
+        while stack:
+            node = stack.pop()
+            if node.nodeName() == "MapInPandas":
+                name = node.functionExpr().toString().split("(", 1)[0]
+                udf_outputs[name] = node.schema().simpleString()
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+        assert set(udf_outputs) == {"parse_pages", "analyze_and_finish"}
+        assert "blocks_json:string" in udf_outputs["analyze_and_finish"]
+        for name, schema in udf_outputs.items():
+            assert "struct" not in schema.split("<", 1)[1], (name, schema)
+        assert "from_json" in qe.executedPlan().toString()
+
+    def test_config_rejects_unknown_mode(self):
+        """Only the two plans exist; anything else (including the removed
+        'staged' plan) fails at construction, naming both."""
+        from ocr_spark.pipeline import PipelineConfig
+
+        with pytest.raises(ValueError) as err:
+            PipelineConfig(mode="staged")
+        assert "'fused'" in str(err.value) and "'paged'" in str(err.value)
+
     def test_nested_schema_pruning_on_extracted(self, spark, extracted_path):
         """A query touching only pages[].i must scan a pruned nested
         schema — not deserialize the whole block/line tree (the `extracted`

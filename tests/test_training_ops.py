@@ -4951,12 +4951,15 @@ class TestBm25Topk:
         qf = spark.createDataFrame(
             [(0, "shared w1")], "query_id long, query string"
         )
-        a = sorted(tuple(r) for r in bm25_topk(df, qf, k=3).collect())
+        a = sorted(
+            tuple(r)
+            for r in bm25_topk(df, qf, k=3, broadcast_counts=False).collect()
+        )
         c = sorted(
             tuple(r)
             for r in bm25_topk(df, qf, k=3, broadcast_counts=True).collect()
         )
-        assert a == c
+        assert a and a == c
         with pytest.raises(ValueError, match="k must be"):
             bm25_topk(df, qf, k=0)
         with pytest.raises(ValueError, match="k1 >= 0"):
@@ -5152,6 +5155,9 @@ class TestBucketByQuantiles:
             bucket_by_quantiles(df, "score", labels=("a", "b"))
         with pytest.raises(ValueError, match="strictly increasing"):
             bucket_by_quantiles(df, "score", probs=(0.5, 0.25))
+        # a colliding out column raises instead of being renamed
+        with pytest.raises(ValueError, match="already has a column"):
+            bucket_by_quantiles(df, "score", out="doc_id")
         # approx path assigns every row some bucket
         big = spark.createDataFrame(
             [(i, float(i % 97)) for i in range(500)],
